@@ -57,39 +57,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The default 100-entry codegen class cache thrashes across a 60-query
-      // suite: the warmup pass's compiled classes are evicted before the
-      // timed pass, so wide-aggregate queries (64-column MinHash/SimHash)
-      // pay multi-second Janino recompiles in the measurement. Size the
-      // cache to the suite.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Single-file tables split by byte range: the default 128 MB split
-      // leaves a 64 MB 100x-scale table on ONE core of 32. 8 MB keeps base-SF
-      // plans identical (every sf0.1 file is smaller than 8 MB -> still one
-      // split) while a scaled corpus fans out across the executor. The open
-      // cost must scale WITH the split size (default 4 MB was tuned for
-      // 128 MB bins): left at 4 MB, an 8 MB bin packs only TWO small files,
-      // shattering every multi-file scratch store into tiny tasks — measured
-      // as a broad 1.3–1.8x suite slowdown. 256 KB keeps the default's 32:1
-      // bin:open-cost ratio.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "262144"))
-      // pinned for WardenFilter's shared from_json (see Verify.scala)
-      .config("spark.sql.json.enablePartialResults", "true")
-      // native graft expressions (cosine_sim) via the declarative hook; the
-      // operators also self-register imperatively on foreign sessions
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.kryo.registrator", "graft.GraftKryoRegistrator")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(defaultCpus = 32)
     // SPARK_GRAFT_ONLY=name1,name2 restricts the run (local iteration aid).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)

@@ -8,12 +8,11 @@ import graft.functions.{BpeBroadcasts, BpeTokenCount, ChunkFps, CosineSim, Disti
 
 /** The library's `SparkSessionExtensions` hook — the supported way to make
   * graft's native expressions visible to SQL and `call_function` on any
-  * session:
+  * session. [[graft.Session.builder]] sets `spark.sql.extensions` to this
+  * class, so every session it builds has them:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
+  * val spark = graft.Session.builder(cpus = 8).getOrCreate()
   * }}}
   *
   * For sessions the caller does not build (notebooks, test harnesses),

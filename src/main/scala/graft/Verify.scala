@@ -1,33 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // see Bench.scala
-      // byte-range splits sized so scaled single-file tables fan out across
-      // the executor; open cost scaled with the split size (see Bench.scala)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "262144"))
-      // pinned: WardenFilter's shared from_json relies on partial-result
-      // conversion to confine per-row schema conflicts to the conflicting
-      // subtree (default true on Spark 4.x; pinned so behavior cannot
-      // silently change under us — see WardenFilter.apply)
-      .config("spark.sql.json.enablePartialResults", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.kryo.registrator", "graft.GraftKryoRegistrator")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=name1,name2 restricts the dump (local iteration aid,
     // same contract as Bench); the driver never sets it.

@@ -77,14 +77,16 @@ object Ann {
     * per-element double sum/count the avg() computed, with the identical
     * partial-merge-order ulp class (measured identical against the
     * 6-dp-rounded DuckDB oracle at sf0.001 AND sf0.01 before shipping —
-    * the prototype-then-verify VERDICT r15 asked for).
+    * the prototype-then-verify VERDICT r15 asked for). The denominator
+    * counts only the rows `vec_sum` adds: a null embedding moves no
+    * centroid.
     */
   def centroids(embeddings: DataFrame, clusterCol: String = "label"): DataFrame = {
     graft.GraftExtensions.register(embeddings.sparkSession)
     asDouble(embeddings, "embedding")
       .groupBy(col(clusterCol).as("cluster"))
       .agg(call_function("vec_sum", col("embedding")).as("vs"),
-        count(lit(1)).as("n"))
+        count(col("embedding")).as("n"))
       .select(col("cluster"),
         transform(col("vs"), x => x / col("n")).as("centroid"))
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import graft.llm.{Bpe, Retrieval, Sketch}
   * replace-chain formulation mis-merges), and unit-covers the BM25 and HLL
   * paths the oracle queries exercise only end-to-end.
   */
-class BpeSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeSpec extends AnyFunSuite with SparkSuite {
 
   /** Reference BPE encode: split to chars per word, then repeatedly merge
     * the single leftmost occurrence of the merge pair until none remains —

@@ -10,7 +10,7 @@ import graft.ops.{TaskCodec, UpdateAlgebra}
   * (`common/task_queue.py:84–113`) and the bulk-reputation binary
   * IP/double format (`NERDweb/nerd_main.py:2427–2468`).
   */
-class EdgeCodecSpec extends AnyFunSuite {
+class EdgeCodecSpec extends AnyFunSuite with SparkSuite {
 
   private def forAllSamples[A](gen: scala.util.Random => A, n: Int = 200)(body: A => Unit): Unit = {
     val r = new scala.util.Random(42)
@@ -67,9 +67,6 @@ class EdgeCodecSpec extends AnyFunSuite {
   }
 
   test("bulk endpoint end-to-end: binary IPs in, ordered packed reps out") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
     import spark.implicits._
     val snapshot = Seq((10L, 0.25), (20L, 0.5)).toDF("entity", "rep")
     // request: 20, 99 (unknown), 10 — response order must follow the request

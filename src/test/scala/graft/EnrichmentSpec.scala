@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +11,7 @@ import graft.sources.{EnrichmentSource, Intel, PtrSource, ShodanSource}
   * live whois/DNS/Shodan integration would be) plugs in without touching
   * Intel.scala.
   */
-class EnrichmentSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EnrichmentSpec extends AnyFunSuite with SparkSuite {
 
   private def ips: DataFrame = {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +9,8 @@ import graft.derive.Derive
 import graft.sinks.Exports
 
 /** Export sinks: frame content, ordering, and the CSV write path. */
-class ExportsSpec extends AnyFunSuite {
+class ExportsSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def today(): String =
     graft.core.Tables.events(spark, sf).agg(max(to_date(col("ts")))).head.getDate(0).toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.derive.Fmp
@@ -10,13 +9,7 @@ import graft.derive.Fmp.{Leaf, Split}
   * route identically — including the XGBoost-style default-right NULL path —
   * because the DuckDB oracle scores with the rendered SQL.
   */
-class FmpSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FmpSpec extends AnyFunSuite with SparkSuite {
 
   private val tree = Split("a", 5, Leaf(0.25), Split("b", 0, Leaf(-0.5), Leaf(0.0625)))
 

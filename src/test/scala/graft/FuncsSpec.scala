@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -10,14 +9,7 @@ import graft.functions.Funcs
 /** Scalar-function edge cases (SURVEY §2.9): ip codec roundtrips over the
   * full 32-bit range, reserved-range boundaries, and next_step arithmetic.
   */
-class FuncsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FuncsSpec extends AnyFunSuite with SparkSuite {
 
   test("ipstr2int(int2ipstr(x)) == x across the 32-bit range (property)") {
     import spark.implicits._
@@ -89,5 +81,59 @@ class FuncsSpec extends AnyFunSuite {
       .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
     val allWant = rows.groupBy(_._1).map { case (gk, vs) => gk -> vs.map(_._2).sorted }
     assert(all === allWant)
+  }
+
+  // vec_sum's buffer: the running element-wise sum; empty = no non-null row yet
+  private val vecSum = graft.functions.VecSum(
+    org.apache.spark.sql.catalyst.expressions.BoundReference(0,
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType), nullable = true))
+  private def vecRow(v: Double*) = org.apache.spark.sql.catalyst.InternalRow(
+    if (v.isEmpty) null else new org.apache.spark.sql.catalyst.util.GenericArrayData(v.toArray))
+
+  test("vec_sum update skips null rows") {
+    var buf = vecSum.createAggregationBuffer()
+    buf = vecSum.update(buf, vecRow())
+    assert(buf.isEmpty)
+    buf = vecSum.update(buf, vecRow(1.0, 2.0))
+    buf = vecSum.update(buf, vecRow())
+    buf = vecSum.update(buf, vecRow(3.0, 4.0))
+    assert(buf.toSeq == Seq(4.0, 6.0))
+  }
+
+  test("vec_sum merge with an empty side returns the other side") {
+    val empty = vecSum.createAggregationBuffer()
+    assert(vecSum.merge(empty, Array(1.0, 2.0)).toSeq == Seq(1.0, 2.0))
+    assert(vecSum.merge(Array(1.0, 2.0), empty).toSeq == Seq(1.0, 2.0))
+    assert(vecSum.merge(empty, vecSum.createAggregationBuffer()).isEmpty)
+    assert(vecSum.merge(Array(1.0, 2.0), Array(0.5, -2.0)).toSeq == Seq(1.5, 0.0))
+  }
+
+  test("vec_sum serialize/deserialize round-trips the buffer bit for bit") {
+    for (buf <- Seq(Array.emptyDoubleArray, Array(1.5, -0.0, Double.NaN,
+        Double.PositiveInfinity, Double.MinPositiveValue))) {
+      val back = vecSum.deserialize(vecSum.serialize(buf))
+      assert(back.map(java.lang.Double.doubleToRawLongBits).toSeq ==
+        buf.map(java.lang.Double.doubleToRawLongBits).toSeq)
+    }
+  }
+
+  test("vec_sum of an all-null group is null; other groups skip their nulls") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.call_function
+    graft.GraftExtensions.register(spark)
+    assert(vecSum.eval(vecSum.createAggregationBuffer()) == null)
+    val df = Seq[(Int, Option[Seq[Double]])](
+      (0, None), (0, None),
+      (1, Some(Seq(1.0, 2.0))), (1, None), (1, Some(Seq(3.0, 4.0))))
+      .toDF("g", "v").repartition(2)
+    val got = df.groupBy(col("g")).agg(call_function("vec_sum", col("v")).as("s"))
+      .collect().map(r => r.getInt(0) -> Option(r.getSeq[Double](1))).toMap
+    assert(got == Map(0 -> None, 1 -> Some(Seq(4.0, 6.0))))
+  }
+
+  test("vec_sum raises on a vector length mismatch") {
+    val buf = vecSum.update(vecSum.createAggregationBuffer(), vecRow(1.0, 2.0))
+    intercept[IllegalArgumentException](vecSum.update(buf, vecRow(1.0, 2.0, 3.0)))
+    intercept[IllegalArgumentException](vecSum.merge(Array(1.0), Array(1.0, 2.0)))
   }
 }

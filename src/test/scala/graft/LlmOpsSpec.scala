@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.{Dedup, TextStats}
@@ -9,14 +8,7 @@ import graft.llm.{Dedup, TextStats}
   * inverted-index skew guard, the trigram classifier, and the snapshot's
   * shuffle budget.
   */
-class LlmOpsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LlmOpsSpec extends AnyFunSuite with SparkSuite {
 
   test("boilerplateScrub drops corpus-frequent chunks, keeps order, preserves membership") {
     import spark.implicits._
@@ -1620,5 +1612,16 @@ class LlmOpsSpec extends AnyFunSuite {
     val exchanges = "Exchange".r
       .findAllIn(snap.queryExecution.executedPlan.toString).size
     assert(exchanges <= 2, s"snapshot plan grew to $exchanges exchanges")
+  }
+
+  test("centroids average only non-null embeddings") {
+    import spark.implicits._
+    val emb = Seq[(Long, Int, Option[Seq[Float]])](
+      (0L, 0, Some(Seq(2f, 4f))), (1L, 0, Some(Seq(4f, 8f))), (2L, 0, None),
+      (3L, 1, None))
+      .toDF("vec_id", "label", "embedding")
+    val got = graft.llm.Ann.centroids(emb).collect()
+      .map(r => r.getInt(0) -> Option(r.getSeq[Double](1))).toMap
+    assert(got == Map(0 -> Some(Seq(3.0, 6.0)), 1 -> None))
   }
 }

@@ -1,21 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end smoke over sf0.001: the flagship entry plus every declared
   * query must produce rows and agree between the fold path and the relational
   * path where both exist (SURVEY §7.3 equivalence requirement).
   */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan audits: the optimizations we rely on at scale must actually
@@ -9,15 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * pushing filters would all pass the correctness gate while regressing the
   * 100-TB story.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import graft.derive.Reputation.RepSource
   * (reference `reputation.py:100–136`): each decay variant's weighted
   * average and the `1 − Π(1 − trust·rep_m)` total.
   */
-class ReputationSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReputationSpec extends AnyFunSuite with SparkSuite {
 
   private val today = "2024-01-10"
 

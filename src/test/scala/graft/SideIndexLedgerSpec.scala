@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,14 +19,7 @@ import graft.streaming.SideIndexLedger
   * and assert the sweep-and-republish converges to the same bytes-exact
   * row set instead of duplicating.
   */
-class SideIndexLedgerSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SideIndexLedgerSpec extends AnyFunSuite with SparkSuite {
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(name).toString

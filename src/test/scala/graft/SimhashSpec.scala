@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.Simhash
@@ -9,14 +8,7 @@ import graft.llm.Simhash
   * recall loss vs brute-force all-pairs Hamming at dist ≤ Bands−1), and the
   * hot-band skew cap must drop only pairs whose every agreeing band is hot.
   */
-class SimhashSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SimhashSpec extends AnyFunSuite with SparkSuite {
 
   /** Doc fixture: near-duplicate families (shared long prefix, tiny suffix
     * edits) plus unrelated singletons — the suffix edits flip only a few

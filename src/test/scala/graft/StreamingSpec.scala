@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,19 +11,8 @@ import graft.streaming.StreamIngest
   * file source in micro-batches must converge to the same snapshot as the
   * one-shot fold, and the late-data gate must reject out-of-window rows.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with SparkSuite {
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // the watermarked day-window test needs the trailing no-data micro-batch
-    // to flush append-mode windows closed by the final batch's watermark;
-    // pin the behavior rather than rely on the default staying true
-    .config("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    .getOrCreate()
 
   test("streamed micro-batches converge to the one-shot fold") {
     import spark.implicits._
@@ -334,6 +322,10 @@ class StreamingSpec extends AnyFunSuite {
 
   test("watermarked day windows emit exactly the watermark-closed buckets, equal to batch") {
     import org.apache.spark.sql.streaming.Trigger
+    // the trailing no-data micro-batch flushes append-mode windows closed by
+    // the final batch's watermark; pin the behavior rather than rely on the
+    // default staying true
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     val ev = graft.core.Tables.events(spark, sf)
     val srcDir = Files.createTempDirectory("graft-win-src").toString
     // two files so the source takes two micro-batches and the watermark

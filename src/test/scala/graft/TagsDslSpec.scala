@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,17 +17,11 @@ case class TagsDslTestRecord(num: Long, zero: Long, fnum: Double, s: String,
   * `etc/tags.yml:1–45`): every case here reproduces what the Python
   * interpreter returns for the same record.
   */
-class TagsDslSpec extends AnyFunSuite {
+class TagsDslSpec extends AnyFunSuite with SparkSuite {
   private type R = TagsDslTestRecord
   private def R(num: Long, zero: Long, fnum: Double, s: String, empty_s: String,
                 nstr: String, arr: Seq[String], earr: Seq[String], b: Boolean): R =
     TagsDslTestRecord(num, zero, fnum, s, empty_s, nstr, arr, earr, b)
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val df = {
     import spark.implicits._

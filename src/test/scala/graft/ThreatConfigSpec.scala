@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +15,7 @@ case class ClsEvent(ip_info: String, description: String,
   * examples of the reference config (`etc/threat_categorization.yml` —
   * grammar doc at lines 27–50, scan/login categories at 52–120).
   */
-class ThreatConfigSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ThreatConfigSpec extends AnyFunSuite with SparkSuite {
 
   // A faithful subset of the reference config (same categories, same
   // trigger lines, same yml shape incl. comments and block scalars).

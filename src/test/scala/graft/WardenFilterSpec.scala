@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import graft.ingest.WardenFilter
   * default action, AND/OR no-mixing, deterministic 1-in-N sampling, and the
   * missing-attribute `!=` pass.
   */
-class WardenFilterSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WardenFilterSpec extends AnyFunSuite with SparkSuite {
 
   private def mk(rows: (Long, String)*) = {
     import spark.implicits._
