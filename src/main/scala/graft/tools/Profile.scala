@@ -16,9 +16,10 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryPro
   *
   *  - `wall_sec`, and every Spark job the run submitted (description,
   *    duration, task count);
-  *  - the driver side: `driver_residual_sec` (wall − Σ job time) and the
-  *    gaps > 100 ms between consecutive jobs, which is where filesystem
-  *    choreography (renames, listings, manifest I/O) and planning live;
+  *  - the Spark driver's share: `driver_residual_sec` (wall − Σ job time)
+  *    and the gaps > 100 ms between consecutive jobs, which is where
+  *    filesystem choreography (renames, listings, manifest I/O) and
+  *    planning live;
   *  - for streaming queries, each trigger's `durationMs` parts — `addBatch`
   *    (plan work; the whole body of a `foreachBatch`), `walCommit` +
   *    `commitOffsets` (offset/commit log), `latestOffset` + `getBatch`
@@ -28,10 +29,9 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryPro
   *    change can remove;
   *  - `plan`: the query's `explain("formatted")` text.
   *
-  * Usage: `runMain graft.tools.Profile <q1,q2,...|all> [outJson]`. Reads
-  * `SPARK_GRAFT_SF_DIR` (default sf0.1) and `SPARK_GRAFT_CPUS` (default 32).
-  * Prints one `PROFILE {...}` line and, when `outJson` is given, writes the
-  * same JSON there.
+  * Usage: `runMain graft.tools.Profile <sfDir> <q1,q2,...|all> [outJson]`
+  * (`SPARK_GRAFT_CPUS` cores, default 32). Prints one `PROFILE {...}` line
+  * and, when `outJson` is given, writes the same JSON there.
   */
 object Profile {
 
@@ -44,10 +44,10 @@ object Profile {
   private def str(s: String): String = mapper.writeValueAsString(s)
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: Profile <q1,q2,...|all> [outJson]")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    require(args.length >= 2, "usage: Profile <sfDir> <q1,q2,...|all> [outJson]")
+    val sfDir = args(0)
     val spark = graft.Session.start(defaultCpus = 32)
-    val wanted = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val wanted = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val queries = graft.SparkEntry.queries
     val names = if (wanted == Seq("all")) queries.keys.toSeq.sorted else wanted
     val unknown = names.filterNot(queries.contains)
@@ -127,7 +127,7 @@ object Profile {
     val json = s"""{"metric":"profile","sf":${str(sfDir)},"cpus":$cpus,""" +
       s""""queries":{${names.map(profile).mkString(",")}}}"""
     println("PROFILE " + json)
-    args.lift(1).foreach(out =>
+    args.lift(2).foreach(out =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n"))
     spark.stop()
   }
